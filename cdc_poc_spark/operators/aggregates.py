@@ -42,24 +42,26 @@ def leaderboard(enriched: DataFrame, k: int = 100) -> DataFrame:
     (RedisSink.java:174-188: ZADD overwrite => last score per content;
     ZREMRANGEBYRANK keeps top 100).
 
+    The latest score per content is A2's latest state, so A1 is the top-K
+    of :func:`content_stats` (:func:`leaderboard_of`); the serving path
+    ranks its published A2 view the same way.
+    """
+    return leaderboard_of(content_stats(enriched), k)
+
+
+def leaderboard_of(stats: DataFrame, k: int = 100) -> DataFrame:
+    """Top-K of an A2 (:func:`content_stats`) result by latest score.
+
     Output: content_id, content_type, content_title, score — the ZRANGE
     member/score read shape (README.md:224).
     """
-    v = valid_events(enriched)
-    ts, eid = F.col("event_ts"), F.col("event_id")
-    # one max_by carrying all latest-value fields: a single struct comparator
-    # per input row instead of one per output column (~2x on the agg stage)
-    agg = v.groupBy("content_id").agg(
-        _latest(
-            F.struct("content_type", "content_title", "engagement_pct"), ts, eid
-        ).alias("l"),
-    ).select(
+    ranked = stats.select(
         "content_id",
-        F.col("l.content_type").alias("content_type"),
-        F.col("l.content_title").alias("content_title"),
-        F.col("l.engagement_pct").alias("score"),
+        "content_type",
+        "content_title",
+        F.col("latest_engagement_pct").alias("score"),
     )
-    return agg.orderBy(F.desc("score"), F.asc("content_id")).limit(k)
+    return top_k(ranked, "score", k, "content_id")
 
 
 def content_stats(enriched: DataFrame) -> DataFrame:

@@ -4179,67 +4179,65 @@ def _fresh(fn: QueryFn) -> QueryFn:
 # per round; this list pins that window explicitly (rotation = edit this
 # list, not dict surgery). The list below is the verbatim output of
 #   python scripts/evidence_freshness.py --window
-# after the round-9 OPTIMIZATION changes landed: stale rows first —
-# every query whose executed code this round's optimizations touched
-# (the simhash exchange barrier, winnow/cell/NB-token/exact-loser
-# substrate persists, the pagerank/LPA loop rework, the timeseries
-# AQE-exemption repartitions, the funnel/clean-corpus plan
-# restructures, plus the r8-staged minhash/embedding verify-join
-# hardening not yet driver-checked) — then evidence-age rotation into
-# the remaining slots (r4/r5-era wh_*/ts_*/cdc_* rows). Every staged
-# query re-proven against the DuckDB oracle at sf0.01 this round before
-# staging.
+# after the serving views moved to per-micro-batch caches: stale rows
+# first — cdc_leaderboard and stream_leaderboard_native (A1 is now the
+# top-K of aggregates.content_stats), stream_minute_window_native
+# (file_wire_source lost a no-op rename), and the twelve queries the
+# round-10 IVF-assignment, connected-components and PNG-codec changes
+# left unchecked — then evidence-age rotation into the remaining slots.
+# The three CDC rows were re-proven against their DuckDB oracles at
+# sf0.01 (plans.diffcheck, fetchall and via_pandas) before staging.
 _DRIVER_WINDOW = [
-"ts_robust_trend",
-"wh_spatial_join",
-"mm_image_dedup_sql",
-"dedup_simhash",
-"pipeline_diversity_sample",
-"sim_knn_communities",
-"sim_knn_pagerank",
-"dedup_lsh_measure",
-"dedup_substring",
-"pipeline_dedup_report",
-"sim_embedding_dups_incremental",
-"text_nb_lang",
-"ts_autocorr",
-"dedup_clusters_incremental",
-"dedup_minhash_incremental",
-"dedup_minhash_lsh",
-"mm_audio_dedup",
-"mm_audio_dedup_sql",
-"mm_image_dedup",
-"pipeline_clean_corpus",
-"pipeline_contamination_report",
-"pipeline_curation_funnel",
-"sim_decontaminate",
-"sim_embedding_dups_ivf",
-"sim_embedding_dups_ivf_capped",
-"sim_embedding_dups_lsh",
-"wh_dbscan",
-"text_boilerplate_strip",
-"text_quality_buckets",
-"ts_anomaly",
-"ts_seasonal_profile",
-"ts_trend_lines",
-"wh_approx_percentiles",
-"wh_approx_users",
-"wh_attribution",
-"wh_co_engagement",
-"wh_equidepth_hist",
-"wh_event_pattern",
-"wh_heavy_hitters",
-"wh_hourly_events",
-"wh_k_anonymity",
-"wh_quality_audit",
-"wh_winsorize",
-"cdc_apply_changelog",
-"cdc_asof_enrich",
-"cdc_content_stats",
-"cdc_dead_letter",
-"cdc_enriched_valid",
-"cdc_enrichment_misses",
-"cdc_high_engagement",
+"cdc_leaderboard",
+"stream_leaderboard_native",
+"stream_minute_window_native",
+"mm_decode_features",
+"mm_media_stats",
+"mm_resize",
+"dedup_clusters",
+"pipeline_keep_best",
+"sim_ann_ivf",
+"sim_ann_recall",
+"sim_ivf_refined",
+"sim_ivfpq_topk",
+"sim_semantic_dedup",
+"stream_clusters_native",
+"wh_entity_resolution",
+"cdc_incremental_agg",
+"cdc_minute_window",
+"cdc_parse_envelope",
+"cdc_parse_unwrapped",
+"cdc_user_engagement",
+"pipeline_weighted_sample",
+"stream_asof_stateful",
+"stream_dedup_native",
+"stream_dedup_state_native",
+"text_ngram_topk",
+"wh_cohort_retention",
+"wh_cube",
+"wh_distinct_agg",
+"wh_event_transitions",
+"wh_explode_tokens",
+"wh_funnel",
+"wh_grouping_sets",
+"wh_negative_samples",
+"wh_outer_join",
+"wh_payload_json",
+"wh_percentiles",
+"wh_pivot",
+"wh_pricing_summary",
+"wh_regional_revenue",
+"wh_retention_rate",
+"wh_rollup",
+"wh_semi_anti_subqueries",
+"wh_set_ops",
+"wh_skew_salted_join",
+"wh_top_orders",
+"wh_unpivot",
+"wh_value_anomalies",
+"wh_value_histogram",
+"wh_window_frames",
+"cdc_scd2_dim",
 ]
 
 

@@ -25,7 +25,9 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def cpu_count() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``local[N]`` width: ``SPARK_GRAFT_CPUS`` if set, else the cores this
+    process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(

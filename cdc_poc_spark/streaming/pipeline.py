@@ -7,9 +7,9 @@ restated as Structured Streaming:
     -> stream-static broadcast enrichment join (J1; dim re-read per batch =
        the reference's latest-wins MapState upsert, §2.3)
     -> derived metrics (O4/O5) inside the same select
-    -> foreachBatch fan-out (W1 serving views + W2 warehouse), mirroring the
-       reference's Redis+BigQuery fan-out with its 30 s cadence as the
-       micro-batch trigger.
+    -> foreachBatch fan-out (W2 warehouse, then the W1 serving views
+       republished over it), mirroring the reference's Redis+BigQuery
+       fan-out with its 30 s cadence as the micro-batch trigger.
 
 Checkpointing gives exactly-once state + idempotent-overwrite serving
 refresh — the effective guarantee the reference configures but does not
@@ -60,7 +60,6 @@ def file_wire_source(
     return (
         spark.readStream.schema(T.StructType([T.StructField("value", T.StringType())]))
         .text(input_dir)
-        .withColumnRenamed("value", "value")
     )
 
 
@@ -105,9 +104,10 @@ def run_cdc_pipeline(
             )
         good = debezium.good_rows(batch_df)
         enriched = enrich(good, dim)
-        sinks.write_warehouse(enriched, config.warehouse_path)
+        sinks.uncache_serving_views(spark, config.serving_prefix)
+        schema = sinks.write_warehouse(enriched, config.warehouse_path)
         sinks.refresh_serving_views(
-            spark, config.warehouse_path, config.serving_prefix
+            spark, config.warehouse_path, config.serving_prefix, schema
         )
 
     writer = parsed.writeStream.foreachBatch(process_batch).option(

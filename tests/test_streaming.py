@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from cdc_poc_spark.operators import aggregates
 from cdc_poc_spark.operators.enrich import enrich
 from cdc_poc_spark.plans import cdc_mapping, registry
+from cdc_poc_spark.session import free_caches
 from cdc_poc_spark.sources.testdata import load_table
 from cdc_poc_spark.streaming import pipeline, sinks
 
@@ -54,7 +55,10 @@ def test_stream_matches_batch(spark, tmp_path):
 
 def test_streaming_incremental_resume(spark, tmp_path):
     """Second half of the stream arrives later; checkpoint resume must
-    append only the new records (exactly-once over the union)."""
+    append only the new records (exactly-once over the union). The serving
+    views cached after the first run must not serve its answers after the
+    second, and must stay correct once their caches are dropped."""
+    views = ("leaderboard", "content_stats", "user_engagement", "engagement_window")
     wire = registry._wire(spark, SF, corrupt=False).withColumn(
         "part", F.monotonically_increasing_id() % 2
     )
@@ -69,6 +73,8 @@ def test_streaming_incremental_resume(spark, tmp_path):
     src = pipeline.file_wire_source(spark, str(wire_dir), ev.schema)
     pipeline.run_cdc_pipeline(spark, src, dim, ev.schema, cfg).awaitTermination()
     n1 = spark.read.parquet(cfg.warehouse_path).count()
+    for v in views:  # builds each view's cache
+        spark.table(f"serving_{v}").collect()
 
     wire.filter("part = 1").select("value").coalesce(1).write.mode("append").text(str(wire_dir))
     src2 = pipeline.file_wire_source(spark, str(wire_dir), ev.schema)
@@ -78,6 +84,16 @@ def test_streaming_incremental_resume(spark, tmp_path):
     expected = ev.filter(F.col("id") % registry.DELETE_MOD != 0).count()
     assert n1 < total
     assert total == expected
+
+    batch_enriched = enrich(ev.filter(F.col("id") % registry.DELETE_MOD != 0), dim)
+    want = {v: _rows(getattr(aggregates, v)(batch_enriched)) for v in views}
+    for v in views:
+        assert _rows(spark.table(f"serving_{v}")) == want[v], v
+    # A2-A4 are materialized; A1 ranks the cached A2 view
+    assert all(spark.catalog.isCached(f"serving_{v}") for v in views[1:])
+    free_caches(spark)
+    for v in views:
+        assert _rows(spark.table(f"serving_{v}")) == want[v], f"{v} after free_caches"
 
 
 def test_native_stateful_window_stream(spark, tmp_path):
@@ -811,7 +827,7 @@ def test_sf1_stream_kill_and_resume(spark, tmp_path):
         reader = spark.readStream.schema("value string")
         if batched:
             reader = reader.option("maxFilesPerTrigger", 1)
-        return reader.text(wire_dir).withColumnRenamed("value", "value")
+        return reader.text(wire_dir)
 
     # uninterrupted reference run
     cfg_a = pipeline.PipelineConfig(
