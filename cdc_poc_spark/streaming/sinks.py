@@ -8,15 +8,19 @@ the clustering keys so min/max row-group stats give the same data-skipping
 clustering buys in BigQuery.
 
 W1 — serving views: the reference's four Redis structures are materialized
-views over the stream (RedisSink.java:40-50). Here each micro-batch
-republishes A2-A4 as cached temp views over the whole fact table, and A1
-as the top-K of the A2 view. A view's cache is built by the first read
-after the micro-batch that published it; every later read scans only the
-view's result, so a read costs the size of the view, not of the warehouse.
-``session.free_caches`` drops those caches: reads stay correct and
-re-aggregate the fact table until the next micro-batch republishes the
-views. Recomputed counts under replay are exactly-once (engine state),
-fixing the reference's non-idempotent HINCRBY (SURVEY §2.7 T6).
+views over the stream, updated in place (RedisSink.java:40-50). Here a
+streaming query publishes A2-A4 once as cached temp views over the whole
+fact table, and A1 as the top-K of the A2 view. Every later warehouse
+append keeps them current: Spark refreshes the file listing of each cached
+plan over the path it writes and rebuilds the cache lazily
+(``CacheManager.recacheByPath``). A view's cache is built by the first read
+after a write; every later read scans only the view's result, so a read
+costs the size of the view, not of the warehouse. ``session.free_caches``
+drops those caches: reads stay correct and re-aggregate the fact table,
+and the pipeline republishes the views after its next write (an uncached
+plan's file listing is not refreshed by a write). Recomputed counts under
+replay are exactly-once (engine state), fixing the reference's
+non-idempotent HINCRBY (SURVEY §2.7 T6).
 """
 
 from __future__ import annotations
@@ -48,10 +52,15 @@ def write_warehouse(
     """Append enriched events to the hour-partitioned, cluster-sorted fact
     table; returns the schema written, partition column included, for
     :func:`refresh_serving_views` to read the table back without inferring
-    it. Hash-repartitioning on the partition column keeps one writer per
-    hour value (no small-file explosion at scale); sortWithinPartitions on
-    the clustering keys makes parquet row-group stats selective for the
-    (content_type, event_type) predicates — the W2 clustering analog.
+    it. The append also refreshes the cached serving views over ``path``
+    (see the module docstring). Hash-repartitioning on the partition column
+    keeps one writer per hour value (no small-file explosion at scale);
+    sorting within partitions on (hour, *clustering keys) makes parquet
+    row-group stats selective for the (content_type, event_type)
+    predicates — the W2 clustering analog. The hour leads the sort because
+    a partitioned write needs its input ordered by the partition column:
+    with the clustering keys alone, the planned write adds its own sort on
+    the hour and Catalyst drops the clustering sort.
 
     The shuffle partition count is EXPLICIT (defaultParallelism): a bare
     repartition(col) is AQE-coalescible, and on a small micro-batch AQE
@@ -63,7 +72,7 @@ def write_warehouse(
     n = enriched.sparkSession.sparkContext.defaultParallelism
     (
         out.repartition(n, F.col(HOUR_PARTITION_COL))
-        .sortWithinPartitions(*CLUSTER_COLS)
+        .sortWithinPartitions(HOUR_PARTITION_COL, *CLUSTER_COLS)
         .write.partitionBy(HOUR_PARTITION_COL)
         .mode(mode)
         .parquet(path)
@@ -88,7 +97,7 @@ def write_batch_idempotent(batch_df: DataFrame, path: str, batch_id: int) -> Non
     n = batch_df.sparkSession.sparkContext.defaultParallelism
     (
         out.repartition(n, F.col(HOUR_PARTITION_COL))
-        .sortWithinPartitions(*CLUSTER_COLS)
+        .sortWithinPartitions(HOUR_PARTITION_COL, *CLUSTER_COLS)
         .write.partitionBy(HOUR_PARTITION_COL)
         .mode("overwrite")
         .parquet(f"{path}/{BATCH_PARTITION_COL}={int(batch_id)}")
@@ -177,7 +186,8 @@ def compact_partitions(
     max_records = max(1, int(target_file_bytes / avg_row_bytes))
 
     tmp = path.rstrip("/") + "__compacting"
-    sort_cols = [c for c in CLUSTER_COLS if c in sub.columns] or [part_col]
+    # the partition column leads, or the planned write re-sorts on it alone
+    sort_cols = [part_col] + [c for c in CLUSTER_COLS if c in sub.columns]
     (
         sub.repartition(F.col(part_col))
         .sortWithinPartitions(*sort_cols)
@@ -208,17 +218,6 @@ CACHED_VIEWS = {
 }
 
 
-def uncache_serving_views(spark: SparkSession, prefix: str = "serving_") -> None:
-    """Drop the serving views' caches. Call it before appending to the
-    warehouse they read: a write re-plans and re-lists every cached plan
-    over its path (``CacheManager.recacheByPath``), work the
-    :func:`refresh_serving_views` after the write would throw away."""
-    for name in CACHED_VIEWS:
-        view = f"{prefix}{name}"
-        if spark.catalog.tableExists(view):
-            spark.catalog.uncacheTable(view)
-
-
 def refresh_serving_views(
     spark: SparkSession,
     warehouse_path: str,
@@ -226,22 +225,25 @@ def refresh_serving_views(
     schema: T.StructType | None = None,
 ) -> None:
     """Publish the W1 serving views over the accumulated fact table (the
-    engine's ZRANGE/HGETALL read surface, SURVEY §3.3.1-2); called once per
-    micro-batch, after its warehouse write.
+    engine's ZRANGE/HGETALL read surface, SURVEY §3.3.1-2). The pipeline
+    calls it after the first warehouse write of each streaming query, and
+    again after a write that found an A2-A4 view no longer cached; every
+    other append keeps the published views current by itself.
 
     A2-A4 are registered as lazily cached temp views, each coalesced to one
     partition so a point read runs one task. Nothing is computed here: the
-    first read after the micro-batch builds a view's cache, and every later
-    read scans only the view's result. A1 is the top-K of the cached A2
-    view, so it keeps no aggregate of its own. Each replaced view is
-    uncached first, so no cache outlives the micro-batch it was built for.
-    ``session.free_caches`` drops the caches; the views then re-aggregate
-    the fact table on every read until the next micro-batch.
+    first read after a write builds a view's cache, and every later read
+    scans only the view's result. A1 is the top-K of the cached A2 view, so
+    it keeps no aggregate of its own. Each replaced view is uncached first,
+    so no cache outlives the view it was built for.
 
     ``schema`` is the schema :func:`write_warehouse` returned; without it
     the fact table's schema is inferred from its files.
     """
-    uncache_serving_views(spark, prefix)
+    for name in CACHED_VIEWS:
+        view = f"{prefix}{name}"
+        if spark.catalog.tableExists(view):
+            spark.catalog.uncacheTable(view)
     reader = spark.read if schema is None else spark.read.schema(schema)
     fact = reader.parquet(warehouse_path)
     for name, agg in CACHED_VIEWS.items():

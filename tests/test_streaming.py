@@ -53,11 +53,13 @@ def test_stream_matches_batch(spark, tmp_path):
         assert _rows(got) == _rows(expect_fn(batch_enriched)), name
 
 
-def test_streaming_incremental_resume(spark, tmp_path):
+def test_streaming_incremental_resume(spark, tmp_path, monkeypatch):
     """Second half of the stream arrives later; checkpoint resume must
     append only the new records (exactly-once over the union). The serving
     views cached after the first run must not serve its answers after the
-    second, and must stay correct once their caches are dropped."""
+    second, and must stay correct once their caches are dropped. The second
+    run drops the caches between its micro-batches: a write does not
+    refresh an uncached view, so the pipeline must publish the views again."""
     views = ("leaderboard", "content_stats", "user_engagement", "engagement_window")
     wire = registry._wire(spark, SF, corrupt=False).withColumn(
         "part", F.monotonically_increasing_id() % 2
@@ -76,9 +78,24 @@ def test_streaming_incremental_resume(spark, tmp_path):
     for v in views:  # builds each view's cache
         spark.table(f"serving_{v}").collect()
 
-    wire.filter("part = 1").select("value").coalesce(1).write.mode("append").text(str(wire_dir))
-    src2 = pipeline.file_wire_source(spark, str(wire_dir), ev.schema)
-    pipeline.run_cdc_pipeline(spark, src2, dim, ev.schema, cfg).awaitTermination()
+    # three files, one micro-batch each; written before the run, because
+    # free_caches drops the wire's local checkpoint
+    wire.filter("part = 1").select("value").repartition(3).write.mode("append").text(str(wire_dir))
+    write = sinks.write_warehouse
+    writes = []
+
+    def free_before_second_write(enriched, path):
+        writes.append(path)
+        if len(writes) == 2:
+            free_caches(spark)
+        return write(enriched, path)
+
+    monkeypatch.setattr(sinks, "write_warehouse", free_before_second_write)
+    src2 = spark.readStream.schema("value string").option("maxFilesPerTrigger", 1)
+    pipeline.run_cdc_pipeline(
+        spark, src2.text(str(wire_dir)), dim, ev.schema, cfg
+    ).awaitTermination()
+    assert len(writes) == 3
     total = spark.read.parquet(cfg.warehouse_path).count()
 
     expected = ev.filter(F.col("id") % registry.DELETE_MOD != 0).count()
@@ -91,6 +108,8 @@ def test_streaming_incremental_resume(spark, tmp_path):
         assert _rows(spark.table(f"serving_{v}")) == want[v], v
     # A2-A4 are materialized; A1 ranks the cached A2 view
     assert all(spark.catalog.isCached(f"serving_{v}") for v in views[1:])
+    # the last write refreshed the views' own file listing, not only their
+    # caches: uncached, they still read every batch
     free_caches(spark)
     for v in views:
         assert _rows(spark.table(f"serving_{v}")) == want[v], f"{v} after free_caches"
@@ -127,10 +146,26 @@ def test_native_stateful_window_stream(spark, tmp_path):
     assert _rows(got) == _rows(batch)
 
 
+def _assert_files_cluster_sorted(path):
+    """Every parquet file under ``path`` is sorted on the clustering keys
+    (Spark's ascending order: nulls first)."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    files = sorted(Path(path).rglob("*.parquet"))
+    assert files
+    for f in files:
+        rows = pq.read_table(f, columns=list(sinks.CLUSTER_COLS)).to_pylist()
+        keys = [tuple((r[c] is not None, r[c]) for c in sinks.CLUSTER_COLS) for r in rows]
+        assert keys == sorted(keys), f"{f} is not sorted on {sinks.CLUSTER_COLS}"
+
+
 def test_compaction_restores_file_budget(spark, tmp_path):
     """Repeated micro-batch appends fragment the fact table (one file per
     batch per partition); compact_partitions must rewrite each partition
-    down to its byte-budget file count without changing the data."""
+    down to its byte-budget file count without changing the data. Every
+    file, appended or compacted, stays sorted on the clustering keys."""
     ev = cdc_mapping.engagement_events(load_table(spark, SF, "events"))
     dim = cdc_mapping.content_dim(load_table(spark, SF, "part"))
     enriched = enrich(ev, dim)
@@ -141,11 +176,13 @@ def test_compaction_restores_file_budget(spark, tmp_path):
     before_stats = sinks.partition_file_stats(spark, path)
     assert before_stats and all(n == 4 for n, _ in before_stats.values())
     before_rows = spark.read.parquet(path).count()
+    _assert_files_cluster_sorted(path)
 
     report = sinks.compact_partitions(spark, path)
     assert set(report) == set(before_stats)
     assert all(b == 4 and a == 1 for b, a in report.values())
     assert spark.read.parquet(path).count() == before_rows
+    _assert_files_cluster_sorted(path)
     # idempotent: a second pass finds nothing to do
     assert sinks.compact_partitions(spark, path) == {}
 
